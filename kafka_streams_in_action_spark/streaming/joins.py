@@ -237,8 +237,8 @@ def windowed_click_view_left_join(events: DataFrame,
 
     Batch equality contract: with a delay-0 watermark and a replay
     whose final no-data batch sees a watermark past EVERY real window
-    end (the caller stages one far-future sentinel row, the
-    _sentinel_windowed_stream discipline), the sink is exactly the
+    end (the caller stages one far-future sentinel row, as
+    plans.queries._sentinel_slices does), the sink is exactly the
     batch LEFT JOIN: matched pairs from the match path + one
     null-extended row per unmatched click from the eviction path.
 
