@@ -2,9 +2,7 @@
 
 entry(spark)  — flagship query (TPC-H Q1 pricing summary, SURVEY §2C C3) at sf0.001.
 queries()     — every implemented operator from SURVEY.md §2 (A-rows + C-rows).
-oracle_sql()  — the DuckDB twin for each hash-matched query; omitted entries
-                (approx sketches, LSH/ANN, binary fan-out) get rows-only checks
-                and are pinned by pytest instead.
+oracle_sql()  — the DuckDB twin of every query (plans/oracle.py compares them).
 """
 
 from __future__ import annotations

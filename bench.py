@@ -603,9 +603,8 @@ def main() -> None:
     # Committed local copy (r8 verdict item 4): the driver's BENCH_r{N}
     # artifact truncated two rounds running; this file preserves the full
     # per-query table for round-over-round regression attribution.
-    from kafka_streams_in_action_spark.plans.queries import CURRENT_ROUND
     local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         f"BENCH_LOCAL_r{CURRENT_ROUND}.json")
+                         "BENCH_LOCAL_r15.json")
     try:
         with open(local, "w") as f:
             json.dump(report, f, indent=1, sort_keys=True)

@@ -1,83 +1,73 @@
-"""Simulate the driver's correctness gate: import __spark_entry__, run
-entry(), then run every queries() entry side-by-side with its oracle_sql()
-on DuckDB (default sf0.01; pass a sf dir as argv[1]).
+"""The oracle gate at the driver's scale: import __spark_entry__ as the
+driver does, smoke-run entry(), then run queries() side by side with their
+oracle_sql() on DuckDB under plans/oracle.py's contract.
 
-Run from anywhere: `python scripts/driver_sim.py` — deliberately importable
-from outside the repo root to exercise the worker-PYTHONPATH path the real
-driver hits."""
-import math
+    python scripts/driver_sim.py [--sf DIR] [NAME ...]
+
+--sf is the testdata directory (default: sf0.01 beside the bench's
+$SPARK_GRAFT_SF_DIR). NAMEs pick queries; none runs every oracle. Each
+query prints `ok`, `FAIL` (type audit, 6-decimal mismatch or an
+exception) or `DRIFT` (6-decimal match, doubles not bit-identical); the
+summary counts 6-decimal matches and bit-exact queries separately.
+Exits 1 on any FAIL or DRIFT.
+
+Runs from any cwd: importing from outside the repo root exercises the
+worker-PYTHONPATH path the real driver hits."""
+import argparse
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import duckdb
 import __spark_entry__ as e
+from kafka_streams_in_action_spark.plans import oracle
 from kafka_streams_in_action_spark.session import get_spark
-from kafka_streams_in_action_spark.plans.typecheck import oracle_type_mismatches
+from kafka_streams_in_action_spark.sources.parquet import DEFAULT_SF_DIR
 
-spark = get_spark("driver-sim")
 
-# 1. entry() smoke
-df = e.entry(spark)
-rows = df.collect()
-print(f"entry(): {len(rows)} rows, schema={df.columns}")
-assert len(rows) >= 0 and df.columns
+def main():
+    ap = argparse.ArgumentParser(description="DuckDB-oracle gate")
+    ap.add_argument("--sf", default=os.path.join(
+        os.path.dirname(DEFAULT_SF_DIR), "sf0.01"))
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    args = ap.parse_args()
+    qs, oracles = e.queries(), e.oracle_sql()
+    if not set(oracles) <= set(qs):
+        sys.exit("oracle_sql() names a query that queries() lacks")
+    unknown = sorted(set(args.names) - set(oracles))
+    if unknown:
+        ap.error(f"no registered oracle for {unknown}")
 
-qs = e.queries()
-oracles = e.oracle_sql()
-print(f"queries: {len(qs)}, with oracle: {len(oracles)}")
-assert set(oracles) <= set(qs), "oracle keys not subset of queries"
+    spark = get_spark("driver-sim")
+    df = e.entry(spark)
+    print(f"entry(): {len(df.collect())} rows, schema={df.columns}")
+    if not df.columns:
+        sys.exit("entry() returned no columns")
+    print(f"queries: {len(qs)}, with oracle: {len(oracles)}")
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-
-def norm(v):
-    if v is None: return "\0NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{round(v,6):.6f}"
-    if isinstance(v, bytes): return v.hex()
-    return str(v)
-
-fails = []
-sample = sorted(oracles)  # all of them — this IS the gate
-only = os.environ.get("SPARK_GRAFT_ONLY")  # focused re-check, not the gate
-if only:
-    import re as _re
-    sample = [n for n in sample if _re.search(only, n)]
-for name in sample:
-    try:
-        sdf = qs[name](spark, SF)
-        scols = sorted(sdf.columns)
-        srows = sorted(tuple(norm(r[c]) for c in scols) for r in sdf.collect())
-        # r6 lesson: the driver hash is type-sensitive but str()-norm below
-        # isn't — audit DuckDB output types against Spark dtypes explicitly.
-        lazy = con.sql(oracles[name])
-        tprob = oracle_type_mismatches(sdf.dtypes, lazy.columns, lazy.types)
-        if tprob:
+    con = oracle.connect(args.sf)
+    names = args.names or sorted(oracles)
+    fails, drifts = [], []
+    for name in names:
+        try:
+            failure, drift = oracle.compare(qs[name](spark, args.sf), con,
+                                            oracles[name])
+        except Exception as ex:
+            failure, drift = f"ERROR {type(ex).__name__}: {str(ex)[:200]}", None
+        if failure:
             fails.append(name)
-            print(f"FAIL {name}: TYPE AUDIT: {tprob}")
-            continue
-        rel = con.execute(oracles[name])
-        dcols_raw = [d[0] for d in rel.description]
-        drows_raw = rel.fetchall()
-        dcols = sorted(dcols_raw)
-        idx = sorted(range(len(dcols_raw)), key=lambda i: dcols_raw[i])
-        drows = sorted(tuple(norm(r[i]) for i in idx) for r in drows_raw)
-        ok = scols == dcols and srows == drows
-        if not ok:
-            fails.append(name)
-            print(f"FAIL {name}: cols {scols==dcols} rows {len(srows)}/{len(drows)}")
-            if scols == dcols and len(srows) == len(drows):
-                d = [(a,b) for a,b in zip(srows,drows) if a!=b][:2]
-                print("  first diffs:", d)
+            print(f"FAIL  {name}: {failure}", flush=True)
+        elif drift:
+            drifts.append(name)
+            print(f"DRIFT {name}: {drift}", flush=True)
         else:
-            print(f"ok   {name} ({len(srows)} rows)")
-    except Exception as ex:
-        fails.append(name)
-        print(f"ERROR {name}: {type(ex).__name__}: {str(ex)[:200]}")
+            print(f"ok    {name}", flush=True)
 
-print(f"\n{len(sample)-len(fails)}/{len(sample)} oracle-matched at {SF}; FAILS: {fails}")
-sys.exit(1 if fails else 0)
+    n = len(names)
+    print(f"\n{n - len(fails)}/{n} 6-decimal matches at {args.sf}; "
+          f"FAILS: {fails}")
+    print(f"{n - len(fails) - len(drifts)}/{n} bit-exact; DRIFT: {drifts}")
+    sys.exit(1 if fails or drifts else 0)
+
+
+if __name__ == "__main__":
+    main()

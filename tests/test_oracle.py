@@ -1,6 +1,7 @@
 """DuckDB-oracle golden tests (SURVEY §5.1): every declared query with an
-oracle runs on sf0.001 and must match row-count, column names, and canonical
-values. This is the local twin of the driver's CORRECTNESS gate at sf0.01."""
+oracle runs on sf0.001 and must pass plans/oracle.py's contract: the type
+audit, the 6-decimal match and no bit drift. scripts/driver_sim.py runs the
+same contract at sf0.01."""
 
 from __future__ import annotations
 
@@ -8,10 +9,10 @@ import re
 
 import pytest
 
+from kafka_streams_in_action_spark.plans import oracle
 from kafka_streams_in_action_spark.plans.queries import QUERIES
-from kafka_streams_in_action_spark.plans.typecheck import oracle_type_mismatches
 
-from .conftest import SF_DIR, assert_frames_match
+from .conftest import SF_DIR
 
 ORACLE_QUERIES = sorted(n for n, s in QUERIES.items() if s.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, s in QUERIES.items() if s.oracle is None)
@@ -39,14 +40,9 @@ def test_oracle_match(spark, duck, name):
     leaked = sorted(v for v in _temp_views(spark) - before
                     if _PER_CALL_VIEW.search(v))
     assert not leaked, f"{name}: per-call temp views left behind: {leaked}"
-    # Type audit first (r6 lesson: the driver hash is type-sensitive; the
-    # two r6 failures were the only HUGEINT-emitting oracles of 171).
-    rel_lazy = duck.sql(spec.oracle)
-    problems = oracle_type_mismatches(sdf.dtypes, rel_lazy.columns,
-                                      rel_lazy.types)
-    assert not problems, f"{name}: oracle type audit: {problems}"
-    rel = duck.execute(spec.oracle)
-    assert_frames_match(sdf, rel, context=name)
+    failure, drift = oracle.compare(sdf, duck, spec.oracle)
+    assert not failure, f"{name}: {failure}"
+    assert not drift, f"{name}: {drift}"
 
 
 def test_every_query_has_an_oracle():

@@ -1,11 +1,11 @@
 """Round-7 operator behavior tests: graph PageRank, EWMA, rolling
 z-score anomalies, attribution, daily resample, winsorize, FK audit,
-n-gram novelty, compaction verdict, the A2-A4 Kafka option surface, and
-the CEP checkpoint-restart durability form (r6 verdict item 7c).
+n-gram novelty, compaction verdict and the A2-A4 Kafka option surface.
+The CEP checkpoint-restart test lives in tests/test_streaming.py.
 
 Oracle parity for every registered row is covered by tests/test_oracle.py;
 these tests pin the BEHAVIORAL contracts the oracles can't express
-(mass conservation, spike detection, restart durability, option maps).
+(mass conservation, spike detection, option maps).
 """
 
 from __future__ import annotations
@@ -217,48 +217,6 @@ def test_compact_files_verdict_on_real_files(spark, tmp_path):
     assert row["files_reduced"] is True
     assert row["readback_complete"] is True
     assert row["ranges_disjoint"] is True
-
-
-# ------------------------------------------------- streaming durability
-
-def test_cep_stream_checkpoint_restart_carries_state(spark, tmp_path):
-    """A17 durability for the CEP negation state machine (r6 verdict item
-    7c): stop the stream mid-log, restart from the same checkpoint with
-    new files — the (sig_ts, sig_ce, ce) state must round-trip the state
-    store so the combined output equals the batch CEP row-for-row."""
-    from kafka_streams_in_action_spark.streaming import stateful
-
-    ev = load_table(spark, "events", SF_DIR)
-    d = str(tmp_path / "cep_cp_src")
-    cp = str(tmp_path / "cep_cp")
-    sink = str(tmp_path / "cep_cp_sink")
-    from pyspark.sql import Window
-    sliced = ev.withColumn(
-        "slice", F.ntile(4).over(Window.orderBy("ts", "event_id")))
-
-    def write_slices(lo, hi):
-        for s in range(lo, hi + 1):
-            (sliced.filter(F.col("slice") == s).drop("slice")
-             .coalesce(1).write.mode("append").parquet(d))
-
-    def run():
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", 1).parquet(d))
-        q = (stateful.cep_conversion_stream(stream)
-             .writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", cp)
-             .outputMode("append").trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-
-    write_slices(1, 2)
-    run()
-    write_slices(3, 4)
-    run()
-
-    batch = event_time.cep_conversion(ev)
-    streamed = spark.read.parquet(sink).select(*batch.columns)
-    assert sorted(map(tuple, batch.collect())) \
-        == sorted(map(tuple, streamed.collect()))
 
 
 # ------------------------------------------------- late round-7 additions

@@ -11,11 +11,12 @@ from pyspark.sql import functions as F
 
 from kafka_streams_in_action_spark.operators import (
     event_time, joins as bjoins, relational)
+from kafka_streams_in_action_spark.plans.oracle import canonical
 from kafka_streams_in_action_spark.sources.parquet import _EVENTS_RAW, load_table
 from kafka_streams_in_action_spark.streaming import pipelines, stateful
 from kafka_streams_in_action_spark.streaming import joins as sjoins
 
-from .conftest import SF_DIR, canonical
+from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
